@@ -4,7 +4,7 @@
 #                     oracles at sf0.01 and write ORACLES_LOCAL_r<N>.json
 #                     (whole-list evidence every round; the driver only
 #                     samples ~50 of the 125 queries)
-#   make test       — full pytest suite
+#   make test       — full pytest suite: the ROADMAP Tier-1 command
 #   make bench      — sf0.1 bench, one JSON line
 #   make operators  — regenerate OPERATORS.md from the contract
 #   make check      — fast hygiene: OPERATORS.md freshness + import smoke
@@ -19,7 +19,10 @@ oracles:
 		--json ORACLES_LOCAL_$(ROUND).json
 
 test:
-	python -m pytest tests/ -q
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" \
+		SPARK_LOCAL_DIRS=/tmp/spark-local; \
+	timeout -k 10 2670 python -m pytest tests/ -q \
+		--continue-on-collection-errors -p no:cacheprovider
 
 bench:
 	python bench.py

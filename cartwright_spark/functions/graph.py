@@ -29,6 +29,8 @@ this serves the training-data-pipeline dedup scope from the brief.
 
 from __future__ import annotations
 
+import collections
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -72,9 +74,22 @@ def _fingerprint(edges: DataFrame) -> tuple:
     return (row["n"], row["h"])
 
 
+def _driver_rows(df: DataFrame, limit: int) -> list | None:
+    """The graph layer's one small-input guard: count ``df`` once and,
+    when it has at most ``limit`` rows, collect it for the caller's
+    driver mirror; otherwise return None and the caller runs its
+    distributed loop. At that size the loops spend their wall on round
+    latency (one or more jobs per round), not data. Callers pass a
+    checkpointed frame, so the count and the collect read one
+    materialization. Tests force the distributed leg by patching this
+    function to return None."""
+    if df.count() > limit:
+        return None
+    return df.collect()
+
+
 def connected_components(edges: DataFrame, src: str = "src",
-                         dst: str = "dst", max_iter: int = 25,
-                         driver_threshold: int = 250_000) -> DataFrame:
+                         dst: str = "dst", max_iter: int = 25) -> DataFrame:
     """(id, component) for every node in the undirected edge list, where
     `component` is the minimum node id of its connected component.
 
@@ -87,30 +102,27 @@ def connected_components(edges: DataFrame, src: str = "src",
     fingerprint hasn't stabilized by then, rather than returning a
     partially-contracted forest.
 
-    Metadata-scale edge lists (<= ``driver_threshold`` distinct edges,
-    counted on the checkpointed table first; 250k 2-int rows is ~8 MB)
-    take a guarded driver union-find (`_union_find_min` — the same
-    mirror the SCC fast path uses) instead of paying O(log n) rounds
-    of star-contraction job latency; min-label components make the two
-    paths result-identical by construction, and the distributed path
-    stays under test via driver_threshold=0."""
+    Small input: the checkpointed distinct edge table is counted by
+    `_driver_rows`; at <= 250k edges (~8 MB of int pairs) a driver
+    union-find (`_union_find_min`) replaces the star-contraction rounds.
+    Min-label components make the two legs result-identical."""
     e = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
          .where(F.col(src).isNotNull() & F.col(dst).isNotNull())
          .where(F.col(src) != F.col(dst))
-         .distinct())
+         .distinct()
+         .localCheckpoint(eager=True))
+
+    rows = _driver_rows(e, 250_000)
+    if rows is not None:
+        comp = _union_find_min([(r["a"], r["b"]) for r in rows])
+        id_t = e.schema["a"].dataType.simpleString()
+        return e.sparkSession.createDataFrame(
+            sorted(comp.items()), f"id {id_t}, component {id_t}")
+
     nodes = (e.select(F.col("a").alias("id"))
              .union(e.select(F.col("b").alias("id")))
              .distinct()
              .localCheckpoint(eager=True))
-    e = e.localCheckpoint(eager=True)
-
-    if driver_threshold and e.count() <= driver_threshold:
-        spark = e.sparkSession
-        comp = _union_find_min([(r["a"], r["b"]) for r in e.collect()])
-        id_t = e.schema["a"].dataType.simpleString()
-        return spark.createDataFrame(
-            sorted(comp.items()), f"id {id_t}, component {id_t}")
-
     prev = None
     for _ in range(max_iter):
         sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
@@ -235,8 +247,7 @@ def _union_find_min(pairs) -> dict:
 
 
 def grid_cluster(points: DataFrame, lat: str = "lat", lon: str = "lon",
-                 cell_deg: float = 5.0, max_iter: int = 25,
-                 driver_threshold: int = 100_000) -> DataFrame:
+                 cell_deg: float = 5.0, max_iter: int = 25) -> DataFrame:
     """Density-grid spatial clustering: snap points to an integer
     lat/lon cell, link occupied cells that are 8-neighbor adjacent, and
     label each point with its cell cluster (DBSCAN's grid approximation
@@ -253,15 +264,11 @@ def grid_cluster(points: DataFrame, lat: str = "lat", lon: str = "lon",
     equi-join on cell_id (dense urban cells are hot keys — AQE skew-join
     splits them).
 
-    When the OCCUPIED-cell count is at metadata scale
-    (<= driver_threshold, counted first — the same guarded-collect
-    pattern as the exact-cosine small-n form), the cell graph's
-    union-find runs on the driver instead of paying ~0.7 s/round of
-    fixed job overhead per large-star/small-star alternation: at 5
-    degrees the whole planet is <= 2,592 cells, and the distributed CC
-    spent its wall on round latency, not data. Result-identical
-    (cluster_id = component-min cell_id either way); the distributed
-    path remains for fine grids past the threshold."""
+    Small input: the cell graph goes through `connected_components`,
+    whose `_driver_rows` guard counts the distinct cell-adjacency edges
+    (<= 250k takes the driver union-find). At 5 degrees the whole
+    planet is <= 2,592 cells, so contract-scale grids take the driver
+    leg. Results match on either leg."""
     ix = F.floor((F.col(lat) + 90.0) / cell_deg).cast("long")
     iy = F.floor((F.col(lon) + 180.0) / cell_deg).cast("long")
     pts = points.withColumn("cell_id", ix * 100000 + iy)
@@ -278,25 +285,6 @@ def grid_cluster(points: DataFrame, lat: str = "lat", lon: str = "lon",
                   ).alias("off"))
     cand = props.select("src", (F.col("src") + F.col("off")).alias("dst"))
     edges = cand.join(cells.withColumnRenamed("cell_id", "dst"), "dst")
-
-    if cells.count() <= driver_threshold:
-        # metadata-scale cell graph: edge list is <= 4x the cell count
-        comp_map = _union_find_min(
-            (r["src"], r["dst"]) for r in edges.collect())
-        spark = points.sparkSession
-        if comp_map:
-            comp = F.broadcast(spark.createDataFrame(
-                [(int(k), int(v)) for k, v in comp_map.items()],
-                "id long, component long"))
-            labels = (cells.join(comp, cells["cell_id"] == comp["id"],
-                                 "left")
-                      .select("cell_id",
-                              F.coalesce("component", "cell_id")
-                              .alias("cluster_id")))
-        else:
-            labels = cells.select(
-                "cell_id", F.col("cell_id").alias("cluster_id"))
-        return pts.join(F.broadcast(labels), "cell_id")
 
     comp = connected_components(edges, "src", "dst", max_iter=max_iter)
     labels = (cells.join(comp, cells["cell_id"] == comp["id"], "left")
@@ -373,8 +361,7 @@ def triangle_counts(edges: DataFrame, src: str = "src",
 
 def grid_bfs_hops(points: DataFrame, lat: str = "lat", lon: str = "lon",
                   cell_deg: float = 5.0, seed_col: str = "is_seed",
-                  max_hops: int = 10,
-                  driver_threshold: int = 100_000) -> DataFrame:
+                  max_hops: int = 10) -> DataFrame:
     """Multi-source BFS hop distance over the occupied-cell grid graph:
     -> (cell_id, hops) for every occupied cell reachable within
     ``max_hops`` 4-neighbour steps of any SEED cell (a cell seeds the
@@ -388,14 +375,12 @@ def grid_bfs_hops(points: DataFrame, lat: str = "lat", lon: str = "lon",
 
     Scale shape: the corpus is touched ONCE (groupBy cell with map-side
     combine folds the seed flag via max); every BFS round runs over
-    OCCUPIED CELLS only — grid-bounded regardless of corpus size. At
-    metadata scale (<= driver_threshold occupied cells, counted first)
-    the BFS runs on the driver — the distributed loop pays ~0.7 s/round
-    of job latency on a box, which dominates sub-100k-node graphs (the
-    measured grid_cluster finding). The distributed path (frontier
-    expand -> occupied equi-join -> anti-join visited, plan truncated
-    per round with an eager localCheckpoint) remains for fine grids.
-    Result-identical either way.
+    OCCUPIED CELLS only — grid-bounded regardless of corpus size. Each
+    distributed round is frontier expand -> occupied equi-join ->
+    anti-join visited, plan truncated with an eager localCheckpoint.
+
+    Small input: `_driver_rows` counts the occupied-cell table; at
+    <= 100k cells the BFS runs on the driver. Result-identical.
     """
     max_hops = int(max_hops)
     if max_hops < 0:
@@ -409,8 +394,8 @@ def grid_bfs_hops(points: DataFrame, lat: str = "lat", lon: str = "lon",
     spark = points.sparkSession
     offs = (1, -1, 100000, -100000)
 
-    if cells.count() <= driver_threshold:
-        rows = cells.collect()
+    rows = _driver_rows(cells, 100_000)
+    if rows is not None:
         occupied = {r["cell_id"] for r in rows}
         dist = {r["cell_id"]: 0 for r in rows if r["s"]}
         frontier = list(dist)
@@ -453,8 +438,7 @@ def grid_bfs_hops(points: DataFrame, lat: str = "lat", lon: str = "lon",
 
 def cost_distance(points: DataFrame, lat: str = "lat", lon: str = "lon",
                   cell_deg: float = 5.0, seed_col: str = "is_seed",
-                  max_hops: int = 10,
-                  driver_threshold: int = 100_000) -> DataFrame:
+                  max_hops: int = 10) -> DataFrame:
     """Cost-distance over the occupied-cell grid: -> (cell_id, cost)
     where cost = the MINIMUM over 4-neighbour paths of <= ``max_hops``
     edges from any seed cell of the sum of point counts of the cells
@@ -469,13 +453,13 @@ def cost_distance(points: DataFrame, lat: str = "lat", lon: str = "lon",
 
     Scale shape: ONE corpus shuffle builds (cell, weight, seed); every
     relaxation round is Bellman-Ford over OCCUPIED CELLS (grid-bounded
-    regardless of corpus size). At metadata scale the relaxation runs
-    on the driver (same guarded pattern as grid_bfs_hops — round
-    latency dominates sub-100k-node graphs); the distributed path
-    relaxes via expand -> union -> min-groupBy with an eager
-    localCheckpoint per round and stops early at a fixed point (a
-    no-improvement round is a Bellman-Ford fixed point, so early exit
-    cannot change the result). Result-identical either way.
+    regardless of corpus size), relaxing via expand -> union ->
+    min-groupBy with an eager localCheckpoint per round, and stops early
+    at a fixed point (a no-improvement round is a Bellman-Ford fixed
+    point, so early exit cannot change the result).
+
+    Small input: `_driver_rows` counts the occupied-cell table; at
+    <= 100k cells the relaxation runs on the driver. Result-identical.
     """
     max_hops = int(max_hops)
     if max_hops < 0:
@@ -490,8 +474,8 @@ def cost_distance(points: DataFrame, lat: str = "lat", lon: str = "lon",
     spark = points.sparkSession
     offs = (1, -1, 100000, -100000)
 
-    if cells.count() <= driver_threshold:
-        rows = cells.collect()
+    rows = _driver_rows(cells, 100_000)
+    if rows is not None:
         weight = {r["cell_id"]: r["w"] for r in rows}
         dist = {r["cell_id"]: 0 for r in rows if r["s"]}
         for _ in range(max_hops):
@@ -536,8 +520,7 @@ def cost_distance(points: DataFrame, lat: str = "lat", lon: str = "lon",
 
 
 def label_propagation(edges: DataFrame, src: str = "src",
-                      dst: str = "dst", iters: int = 5,
-                      driver_threshold: int = 100_000) -> DataFrame:
+                      dst: str = "dst", iters: int = 5) -> DataFrame:
     """Synchronous label propagation communities (Raghavan/Albert/
     Kumara 2007, Phys. Rev. E 76) — deterministic variant: undirected
     symmetrized graph, label_0(v) = v, and each round every node takes
@@ -559,15 +542,9 @@ def label_propagation(edges: DataFrame, src: str = "src",
     neighbour-label rows combine per-mapper instead of piling onto one
     reducer; there is no per-node window sort anywhere. Per-round
     lineage is truncated with an eager localCheckpoint so the DAG
-    stays O(1) deep at any iteration count.
-
-    Metadata-scale edge lists (<= ``driver_threshold`` symmetrized
-    rows, counted first on the checkpointed table) take a guarded
-    driver mirror of the same integer-exact vote/tiebreak recursion —
-    result-identical by construction (counts and min-label ties are
-    deterministic, no float anywhere), avoiding iters x 4 jobs of
-    scheduling latency (the scc/harmonic/diameter discipline); the
-    distributed path stays under test via driver_threshold=0.
+    stays O(1) deep at any iteration count. There is no driver leg: on
+    the contract input at sf0.1 (298k symmetrized rows, 4 cores) a
+    driver mirror of the vote ran no faster than these rounds.
     """
     e = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
          .where(F.col(src).isNotNull() & F.col(dst).isNotNull()))
@@ -576,25 +553,6 @@ def label_propagation(edges: DataFrame, src: str = "src",
          .distinct()
          .repartition(F.col("a"))
          .localCheckpoint(eager=True))
-
-    if driver_threshold and e.count() <= driver_threshold:
-        import collections
-        spark = e.sparkSession
-        adj = collections.defaultdict(list)
-        for r in e.collect():            # symmetrized: both directions present
-            adj[r["a"]].append(r["b"])
-        lab = {v: v for v in adj}
-        for _ in range(int(iters)):
-            nxt = {}
-            for v, nbrs in adj.items():
-                cnt = collections.Counter(lab[u] for u in nbrs)
-                cnt[lab[v]] += 1                       # the self-vote
-                best = max(cnt.values())
-                nxt[v] = min(l for l, c in cnt.items() if c == best)
-            lab = nxt
-        id_t = e.schema["a"].dataType.simpleString()
-        return spark.createDataFrame(
-            sorted(lab.items()), f"id {id_t}, label {id_t}")
     labels = (e.select(F.col("a").alias("id"))
               .distinct()
               .withColumn("label", F.col("id"))
@@ -834,7 +792,6 @@ def _tarjan_min_labels(E: list) -> dict:
     """Iterative Tarjan SCC over an in-memory edge list; returns
     {node: min node id of its SCC} — the driver-side mirror of the
     distributed peel (same label convention)."""
-    import collections
     adj = collections.defaultdict(list)
     nodes = set()
     for a, b in E:
@@ -891,9 +848,7 @@ def _tarjan_min_labels(E: list) -> dict:
 
 def strongly_connected_components(edges: DataFrame, src: str = "src",
                                   dst: str = "dst",
-                                  max_rounds: int = 200,
-                                  driver_threshold: int = 100_000
-                                  ) -> DataFrame:
+                                  max_rounds: int = 200) -> DataFrame:
     """(id, scc_id) over a DIRECTED edge list — scc_id is the minimum
     node id of each strongly connected component. The web-graph use:
     link spam rings and mutually-citing template farms are nontrivial
@@ -933,12 +888,13 @@ def strongly_connected_components(edges: DataFrame, src: str = "src",
 
     Self-loops are dropped (a self-loop never changes an SCC); isolated
     vertices never appear in an edge list — callers coalesce like
-    connected_components. A metadata-scale edge list (<= 
-    ``driver_threshold``, counted first) takes a guarded driver Tarjan
-    pass instead — round latency, not data, dominates there; the
-    distributed peel remains the real path and is tested via
-    driver_threshold=0. Reference scope: jataware/cartwright has no
-    graph layer; engine scope for the crawl-graph axis.
+    connected_components. Output ids carry the edge columns' type.
+
+    Small input: `_driver_rows` counts the checkpointed distinct edge
+    table; at <= 100k edges one driver Tarjan pass
+    (`_tarjan_min_labels`) replaces the peel. Result-identical (scc_id
+    = component min on either leg). Reference scope: jataware/cartwright
+    has no graph layer; engine scope for the crawl-graph axis.
     """
     e = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
          .where(F.col(src).isNotNull() & F.col(dst).isNotNull())
@@ -946,21 +902,13 @@ def strongly_connected_components(edges: DataFrame, src: str = "src",
          .distinct()
          .localCheckpoint(eager=True))
     spark = edges.sparkSession
+    id_t = e.schema["a"].dataType.simpleString()
+    out_schema = f"id {id_t}, scc_id {id_t}"
 
-    # Guarded driver fast path (the grid_cluster discipline): the
-    # trim/color/mark loop spends its wall on ROUND LATENCY, so a
-    # metadata-scale edge list (counted first) is orders of magnitude
-    # faster as one in-memory Tarjan pass — result-identical (scc_id =
-    # component min either way). The distributed path remains for real
-    # graphs past the threshold and is exercised directly in tests via
-    # driver_threshold=0.
-    if driver_threshold and e.count() <= driver_threshold:
-        rows = e.collect()
+    rows = _driver_rows(e, 100_000)
+    if rows is not None:
         comp = _tarjan_min_labels([(r["a"], r["b"]) for r in rows])
-        if not comp:
-            return spark.createDataFrame([], "id long, scc_id long")
-        return spark.createDataFrame(
-            sorted(comp.items()), "id long, scc_id long")
+        return spark.createDataFrame(sorted(comp.items()), out_schema)
 
     nodes = (e.select(F.col("a").alias("id"))
              .union(e.select(F.col("b").alias("id")))
@@ -1050,85 +998,49 @@ def strongly_connected_components(edges: DataFrame, src: str = "src",
              .localCheckpoint(eager=True))
 
     if not done_parts:
-        return spark.createDataFrame([], "id long, scc_id long")
+        return spark.createDataFrame([], out_schema)
     out = done_parts[0]
     for p in done_parts[1:]:
         out = out.unionByName(p)
     return out
 
 
-def harmonic_centrality(edges: DataFrame, sources: list,
-                        src: str = "src", dst: str = "dst",
-                        max_hops: int = 12,
-                        driver_threshold: int = 100_000) -> DataFrame:
-    """k-source harmonic centrality (Boldi & Vigna 2014, "Axioms for
-    centrality" — the sampled form every web-graph study uses, since
-    exact all-pairs is quadratic): h(v) = sum over sample sources s of
-    1/d(s, v), hop distances along DIRECTED edges. -> (id, n_reached,
-    h_sum) for every vertex reached by >= 1 source (s = v contributes
-    nothing, the convention). A high h_sum marks pages close to many
-    seeds — the crawl-frontier prioritization signal PageRank's
-    stationary view doesn't give (PageRank has no notion of DISTANCE
-    from where you are crawling today).
+def _py_bfs(adj: dict, s0, max_hops: int) -> dict:
+    """Driver BFS from ``s0`` over an adjacency dict: {v: min hop count}
+    for every v within ``max_hops`` (s0 at 0). The driver mirror of
+    `_frontier_bfs` for one source."""
+    dist = {s0: 0}
+    q = collections.deque([s0])
+    while q:
+        u = q.popleft()
+        if dist[u] >= max_hops:
+            continue
+        for v in adj.get(u, ()):
+            if v not in dist:
+                dist[v] = dist[u] + 1
+                q.append(v)
+    return dist
 
-    Frontier BFS carrying (source, vertex) state: per round ONE
-    equi-join frontier x edges + ONE anti-join against the visited set
-    (exact min-hop by construction — a vertex pair enters at its first
-    reachable depth). State is |sources| x reachable — linear in the
-    graph per source, never quadratic. Rounds = reachable diameter,
-    capped by ``max_hops`` (beyond ~12 hops 1/d adds < 8% relative —
-    the standard truncation argument); lineage truncated per round with
-    eager localCheckpoints. h_sum is a <= |sources|-term float sum of
-    exact 1/d reciprocals — inside the 6-dp compare tolerance at any
-    sample size that fits a broadcast. Metadata-scale edge lists (<=
-    ``driver_threshold``) take a guarded driver BFS — result-identical;
-    the frontier path is tested via driver_threshold=0.
-    """
-    if not sources:
-        raise ValueError("harmonic_centrality: sources must be non-empty")
-    if max_hops < 1:
-        raise ValueError("harmonic_centrality: max_hops must be >= 1")
-    spark = edges.sparkSession
-    e = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-         .where(F.col(src).isNotNull() & F.col(dst).isNotNull())
-         .where(F.col(src) != F.col(dst))
-         .distinct()
-         .repartition(F.col("a"))
-         .localCheckpoint(eager=True))
-    if driver_threshold and e.count() <= driver_threshold:
-        # guarded driver BFS (the grid_cluster discipline): round
-        # latency dominates at metadata scale; result-identical.
-        import collections
-        adj = collections.defaultdict(list)
-        for r in e.collect():
-            adj[r["a"]].append(r["b"])
-        acc = collections.defaultdict(lambda: [0, 0.0])
-        for s0 in sorted(set(int(x) for x in sources)):
-            dist = {s0: 0}
-            q = collections.deque([s0])
-            while q:
-                u = q.popleft()
-                if dist[u] >= max_hops:
-                    continue
-                for v in adj.get(u, ()):
-                    if v not in dist:
-                        dist[v] = dist[u] + 1
-                        q.append(v)
-            for v, dv in dist.items():
-                if dv > 0:
-                    acc[v][0] += 1
-                    acc[v][1] += 1.0 / dv
-        if not acc:
-            return spark.createDataFrame(
-                [], "id long, n_reached long, h_sum double")
-        return spark.createDataFrame(
-            [(v, c, h) for v, (c, h) in sorted(acc.items())],
-            "id long, n_reached long, h_sum double")
 
-    seeds = spark.createDataFrame(
-        [(int(s),) for s in sorted(set(sources))], "s long")
-    dist = (seeds.select("s", F.col("s").alias("v"),
-                         F.lit(0).cast("int").alias("d"))
+def _adjacency(rows) -> dict:
+    """{a: [b, ...]} from collected (a, b) edge rows."""
+    adj = collections.defaultdict(list)
+    for r in rows:
+        adj[r["a"]].append(r["b"])
+    return adj
+
+
+def _frontier_bfs(e: DataFrame, sources: list, max_hops: int) -> DataFrame:
+    """Multi-source frontier BFS over the directed edge table (a, b):
+    -> (s bigint, v bigint, d int), d = the min hop count from source s
+    to v, for every v within ``max_hops`` (each source at d = 0). Per
+    round ONE equi-join frontier x edges + ONE anti-join against the
+    visited set (a pair enters at its first reachable depth, so d is
+    exact by construction); lineage truncated per round with eager
+    localCheckpoints. State is |sources| x reachable, never quadratic."""
+    dist = (e.sparkSession.createDataFrame(
+                [(s, s, 0) for s in sorted({int(x) for x in sources})],
+                "s long, v long, d int")
             .localCheckpoint(eager=True))
     frontier = dist
     for hop in range(1, max_hops + 1):
@@ -1141,7 +1053,57 @@ def harmonic_centrality(edges: DataFrame, sources: list,
         if frontier.limit(1).count() == 0:
             break
         dist = dist.union(frontier).localCheckpoint(eager=True)
-    return (dist.where(F.col("d") > 0)
+    return dist
+
+
+def harmonic_centrality(edges: DataFrame, sources: list,
+                        src: str = "src", dst: str = "dst",
+                        max_hops: int = 12) -> DataFrame:
+    """k-source harmonic centrality (Boldi & Vigna 2014, "Axioms for
+    centrality" — the sampled form every web-graph study uses, since
+    exact all-pairs is quadratic): h(v) = sum over sample sources s of
+    1/d(s, v), hop distances along DIRECTED edges. -> (id, n_reached,
+    h_sum) for every vertex reached by >= 1 source (s = v contributes
+    nothing, the convention). A high h_sum marks pages close to many
+    seeds — the crawl-frontier prioritization signal PageRank's
+    stationary view doesn't give (PageRank has no notion of DISTANCE
+    from where you are crawling today).
+
+    One `_frontier_bfs` over all sources, aggregated per vertex. Rounds
+    = reachable diameter, capped by ``max_hops`` (beyond ~12 hops 1/d
+    adds < 8% relative — the standard truncation argument). h_sum is a
+    <= |sources|-term float sum of exact 1/d reciprocals — inside the
+    6-dp compare tolerance at any sample size that fits a broadcast.
+
+    Small input: `_driver_rows` counts the checkpointed distinct edge
+    table; at <= 100k edges each source runs `_py_bfs` on the driver.
+    Result-identical.
+    """
+    if not sources:
+        raise ValueError("harmonic_centrality: sources must be non-empty")
+    if max_hops < 1:
+        raise ValueError("harmonic_centrality: max_hops must be >= 1")
+    spark = edges.sparkSession
+    e = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+         .where(F.col(src).isNotNull() & F.col(dst).isNotNull())
+         .where(F.col(src) != F.col(dst))
+         .distinct()
+         .repartition(F.col("a"))
+         .localCheckpoint(eager=True))
+    rows = _driver_rows(e, 100_000)
+    if rows is not None:
+        adj = _adjacency(rows)
+        acc: dict = {}
+        for s0 in sorted({int(x) for x in sources}):
+            for v, dv in _py_bfs(adj, s0, max_hops).items():
+                if dv > 0:
+                    c, h = acc.get(v, (0, 0.0))
+                    acc[v] = (c + 1, h + 1.0 / dv)
+        return spark.createDataFrame(
+            [(v, c, h) for v, (c, h) in sorted(acc.items())],
+            "id long, n_reached long, h_sum double")
+
+    return (_frontier_bfs(e, sources, max_hops).where(F.col("d") > 0)
             .groupBy(F.col("v").alias("id"))
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_reached"),
                  F.sum(F.lit(1.0) / F.col("d")).alias("h_sum")))
@@ -1210,8 +1172,7 @@ def degree_assortativity(edges: DataFrame, src: str = "src",
 
 def diameter_double_sweep(edges: DataFrame, start,
                           src: str = "src", dst: str = "dst",
-                          max_hops: int = 64,
-                          driver_threshold: int = 100_000) -> DataFrame:
+                          max_hops: int = 64) -> DataFrame:
     """Double-sweep diameter lower bound (Magnien/Latapy/Habib 2009 —
     the standard cheap estimator; exact BFS diameter is all-pairs):
     BFS from ``start`` over the UNDIRECTED view, take the farthest
@@ -1221,12 +1182,13 @@ def diameter_double_sweep(edges: DataFrame, start,
     (start_id, start_ecc, far_id, diameter_lb, n_reached): both
     eccentricities, the pivot, and the size of start's component.
 
-    Scale shape: two frontier BFS passes (the harmonic_centrality
-    kernel — per round ONE equi-join + anti-join, lineage truncated);
-    the only driver data are two single-row argmax collects (the
-    guarded metadata-scale pattern); a metadata-scale edge list (<=
-    ``driver_threshold``) runs both sweeps driver-side, result-identical.
-    ``max_hops`` caps each sweep."""
+    Scale shape: two single-source `_frontier_bfs` passes; the only
+    driver data are two single-row argmax collects. ``max_hops`` caps
+    each sweep.
+
+    Small input: `_driver_rows` counts the checkpointed symmetrized
+    edge table; at <= 100k rows both sweeps run `_py_bfs` on the
+    driver with the same pivot rule. Result-identical."""
     if max_hops < 1:
         raise ValueError("diameter_double_sweep: max_hops must be >= 1")
     spark = edges.sparkSession
@@ -1237,64 +1199,27 @@ def diameter_double_sweep(edges: DataFrame, start,
          .distinct()
          .repartition(F.col("a"))
          .localCheckpoint(eager=True))
+    schema = ("start_id long, start_ecc int, far_id long, "
+              "diameter_lb int, n_reached long")
 
-    if driver_threshold and e.count() <= driver_threshold:
-        # guarded driver double sweep; result-identical (same pivot rule)
-        import collections
-        adj = collections.defaultdict(list)
-        for r in e.collect():
-            adj[r["a"]].append(r["b"])
-
-        def _pybfs(s0):
-            dist = {s0: 0}
-            q = collections.deque([s0])
-            while q:
-                u = q.popleft()
-                if dist[u] >= max_hops:
-                    continue
-                for v in adj.get(u, ()):
-                    if v not in dist:
-                        dist[v] = dist[u] + 1
-                        q.append(v)
-            return dist
-
-        d1 = _pybfs(int(start))
-        far_v = min((v for v in d1),
-                    key=lambda v: (-d1[v], v))
-        d2 = _pybfs(far_v)
+    rows = _driver_rows(e, 100_000)
+    if rows is not None:
+        adj = _adjacency(rows)
+        d1 = _py_bfs(adj, int(start), max_hops)
+        far_v = min(d1, key=lambda v: (-d1[v], v))
+        d2 = _py_bfs(adj, far_v, max_hops)
         return spark.createDataFrame(
-            [(int(start), int(d1[far_v]), int(far_v),
-              int(max(d2.values())), len(d2))],
-            "start_id long, start_ecc int, far_id long, "
-            "diameter_lb int, n_reached long")
+            [(int(start), d1[far_v], far_v, max(d2.values()), len(d2))],
+            schema)
 
-    def _bfs(s: int) -> DataFrame:
-        dist = (spark.createDataFrame([(int(s), 0)], "v long, d int")
-                .localCheckpoint(eager=True))
-        frontier = dist
-        for hop in range(1, max_hops + 1):
-            nxt = (frontier.join(e, frontier["v"] == e["a"])
-                   .select(F.col("b").alias("v"),
-                           F.lit(hop).cast("int").alias("d"))
-                   .distinct())
-            frontier = (nxt.join(dist, ["v"], "left_anti")
-                        .localCheckpoint(eager=True))
-            if frontier.limit(1).count() == 0:
-                break
-            dist = dist.union(frontier).localCheckpoint(eager=True)
-        return dist
-
-    d1 = _bfs(int(start))
+    d1 = _frontier_bfs(e, [start], max_hops)
     far = (d1.orderBy(F.col("d").desc(), F.col("v").asc())
            .limit(1).collect()[0])
-    d2 = _bfs(int(far["v"]))
+    d2 = _frontier_bfs(e, [far["v"]], max_hops)
     ecc2 = d2.agg(F.max("d").alias("m"),
                   F.count(F.lit(1)).alias("c")).collect()[0]
     return spark.createDataFrame(
-        [(int(start), int(far["d"]), int(far["v"]), int(ecc2["m"]),
-          int(ecc2["c"]))],
-        "start_id long, start_ecc int, far_id long, "
-        "diameter_lb int, n_reached long")
+        [(int(start), far["d"], far["v"], ecc2["m"], ecc2["c"])], schema)
 
 
 def neighbor_jaccard(edges: DataFrame, src: str = "src",

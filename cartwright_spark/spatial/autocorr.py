@@ -226,28 +226,12 @@ def getis_ord_gistar(points: DataFrame, lat_col: str = "lat",
         cell_counts(points, lat_col, lon_col, cell_deg), cell_deg)
 
 
-def gistar_from_cells(cells: DataFrame, cell_deg: float = 5.0,
-                      driver_threshold: int | None = None) -> DataFrame:
+def gistar_from_cells(cells: DataFrame, cell_deg: float = 5.0) -> DataFrame:
     """Gi* from an existing (cell_row, cell_col, x) rollup — the
     incremental-maintenance entry point: per-batch cell counts are
     algebraically mergeable (sum by cell), and everything downstream of
-    the counts is grid-bounded recomputation.
-
-    driver_threshold: when set and count(cells) <= threshold, compute
-    the statistic on the driver (`_gistar_driver`) instead of the
-    3-shuffle distributed plan — the grid_cluster counted-guard
-    precedent. The rollup is grid-bounded, so callers that already
-    materialized it (the pipeline's tile stage) pay one cheap count and
-    save ~1 s of tiny-shuffle job latency per run; results are
-    bit-identical (tests/test_pipeline.py, test_autocorr.py). Callers
-    at fine grids (4^15 cells) leave it None and keep the distributed
-    plan — nothing here is ever proportional to the corpus."""
-    if driver_threshold is not None and cells.count() <= driver_threshold:
-        rows = cells.select("cell_row", "cell_col", "x").collect()
-        out = _gistar_driver(rows, cell_deg)
-        return cells.sparkSession.createDataFrame(
-            out, "cell_row bigint, cell_col bigint, x bigint, "
-                 "deg bigint, s bigint, gi_star double")
+    the counts is grid-bounded recomputation. Always the distributed
+    plan; `_gistar_driver` is its driver mirror."""
     per_cell = neighbour_stats(cells, cell_deg)
     stats = per_cell.agg(
         F.count(F.lit(1)).alias("n_cells"),
@@ -259,8 +243,10 @@ def gistar_from_cells(cells: DataFrame, cell_deg: float = 5.0,
 
 
 def _gistar_driver(rows, cell_deg: float) -> list[tuple]:
-    """Driver mirror of neighbour_stats + gistar_sql for counted-guard
-    grids. Every aggregate is an exact Python int (arbitrary precision,
+    """Driver mirror of neighbour_stats + gistar_sql. Its one caller is
+    the pipeline's tile stage, which counts nothing: it takes this leg
+    when the static bound 4^zoom <= 300k caps the tile rollup's rows.
+    Every aggregate is an exact Python int (arbitrary precision,
     so it can only be MORE exact than the distributed BIGINT path —
     identical below 2^63), and the final float expression replays
     gistar_sql() operation-for-operation in IEEE doubles, so the result

@@ -64,7 +64,8 @@ def hausdorff_join(pts: DataFrame, id_col: str = "traj_id",
       (<= kernel_max_pts points).
     * ``"auto"`` (default) — kernel when the LARGEST trajectory fits
       (one metadata-scale agg on the per-trajectory bbox/count table
-      decides — the grid_cluster guarded-fast-path discipline),
+      decides — the guarded small-input pattern of
+      functions/graph.py `_driver_rows`),
       dataframe otherwise.
     """
     if not (max_dist > 0.0):

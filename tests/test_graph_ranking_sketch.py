@@ -7,12 +7,29 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from cartwright_spark.functions import graph
 from cartwright_spark.functions.graph import connected_components, grid_cluster
 from cartwright_spark.operators.ranking import bm25_scores, bm25_topk
 from cartwright_spark.operators.sketch import kmv_distinct, kmv_sketch
 
 
 # ---------------------------------------------------------------- graph
+
+def _force_distributed(monkeypatch):
+    """Make the graph layer's small-input guard decline, so every
+    guarded operator runs its distributed leg."""
+    monkeypatch.setattr(graph, "_driver_rows", lambda df, limit: None)
+
+
+@pytest.fixture(params=("driver", "distributed"))
+def leg(request, monkeypatch):
+    """Run a test once per leg of `graph._driver_rows`. Test inputs are
+    far below every guard limit, so the unpatched guard takes the
+    driver leg."""
+    if request.param == "distributed":
+        _force_distributed(monkeypatch)
+    return request.param
+
 
 def _uf_components(edges):
     nodes = sorted({x for e in edges for x in e})
@@ -665,10 +682,11 @@ def test_bloom_bitmaps_mergeable(spark):
     assert merged == direct
 
 
-def test_grid_cluster_driver_and_distributed_paths_identical(spark):
-    """The guarded driver union-find (cells <= threshold) and the
-    distributed CC path must label identically: cluster_id = min
-    cell_id of the blob either way."""
+def test_grid_cluster_driver_and_distributed_paths_identical(spark,
+                                                            monkeypatch):
+    """The cell graph's driver union-find and the distributed CC leg
+    must label identically: cluster_id = min cell_id of the blob either
+    way."""
     import numpy as np
     import pandas as pd
 
@@ -681,8 +699,9 @@ def test_grid_cluster_driver_and_distributed_paths_identical(spark):
                                rng.uniform(40, 41, 200),
                                rng.uniform(100, 101, 1)])})
     df = spark.createDataFrame(pdf)
-    a = grid_cluster(df, cell_deg=1.0, driver_threshold=100_000).collect()
-    b = grid_cluster(df, cell_deg=1.0, driver_threshold=0).collect()
+    a = grid_cluster(df, cell_deg=1.0).collect()
+    _force_distributed(monkeypatch)
+    b = grid_cluster(df, cell_deg=1.0).collect()
     ka = sorted((r["lat"], r["lon"], r["cell_id"], r["cluster_id"])
                 for r in a)
     kb = sorted((r["lat"], r["lon"], r["cell_id"], r["cluster_id"])
@@ -760,7 +779,7 @@ def test_grid_bfs_max_hops_and_min_over_two_seeds(spark):
     assert out2[12] == 2
 
 
-def test_grid_bfs_driver_vs_distributed_parity(spark):
+def test_grid_bfs_driver_vs_distributed_parity(spark, monkeypatch):
     from cartwright_spark.functions.graph import grid_bfs_hops
     import random
     rng = random.Random(7)
@@ -768,8 +787,8 @@ def test_grid_bfs_driver_vs_distributed_parity(spark):
              for i in range(60)]
     pts = _grid_pts(spark, cells)
     a = sorted(map(tuple, grid_bfs_hops(pts, max_hops=6).collect()))
-    b = sorted(map(tuple, grid_bfs_hops(pts, max_hops=6,
-                                        driver_threshold=0).collect()))
+    _force_distributed(monkeypatch)
+    b = sorted(map(tuple, grid_bfs_hops(pts, max_hops=6).collect()))
     assert a == b and len(a) > 0
 
 
@@ -815,7 +834,7 @@ def test_cost_distance_hop_bound(spark):
     assert out2 == {5: 0, 6: 2, 7: 6}
 
 
-def test_cost_distance_driver_vs_distributed_parity(spark):
+def test_cost_distance_driver_vs_distributed_parity(spark, monkeypatch):
     from cartwright_spark.functions.graph import cost_distance
     import random
     rng = random.Random(11)
@@ -823,8 +842,8 @@ def test_cost_distance_driver_vs_distributed_parity(spark):
               rng.randrange(1, 6), i % 7 == 0) for i in range(40)]
     pts = _cost_pts(spark, cells)
     a = sorted(map(tuple, cost_distance(pts, max_hops=5).collect()))
-    b = sorted(map(tuple, cost_distance(pts, max_hops=5,
-                                        driver_threshold=0).collect()))
+    _force_distributed(monkeypatch)
+    b = sorted(map(tuple, cost_distance(pts, max_hops=5).collect()))
     assert a == b and len(a) > 0
 
 
@@ -1251,15 +1270,13 @@ def _py_scc(E):
             for v in nodes}
 
 
-def test_scc_cycles_chains_and_tails(spark):
+def test_scc_cycles_chains_and_tails(spark, leg):
     from cartwright_spark.functions.graph import (
         strongly_connected_components as scc)
     E = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 4), (6, 1), (7, 8)]
     df = spark.createDataFrame(E, "src long, dst long")
-    for thr in (100_000, 0):     # driver Tarjan AND distributed peel
-        got = {r.id: r.scc_id
-               for r in scc(df, driver_threshold=thr).collect()}
-        assert got == _py_scc(E), thr
+    got = {r.id: r.scc_id for r in scc(df).collect()}
+    assert got == _py_scc(E)
 
 
 def test_scc_pure_dag_all_singletons(spark):
@@ -1281,19 +1298,17 @@ def test_scc_one_big_cycle(spark):
     assert got == {i: 0 for i in range(n)}
 
 
-def test_scc_brute_force_random_graph(spark):
+def test_scc_brute_force_random_graph(spark, leg):
     from cartwright_spark.functions.graph import (
         strongly_connected_components as scc)
     E = sorted({((i * 7 + 3) % 30, (i * 13 + 5) % 30) for i in range(120)}
                - {(i, i) for i in range(30)})
     df = spark.createDataFrame(E, "src long, dst long")
-    for thr in (100_000, 0):
-        got = {r.id: r.scc_id
-               for r in scc(df, driver_threshold=thr).collect()}
-        assert got == _py_scc(E), thr
+    got = {r.id: r.scc_id for r in scc(df).collect()}
+    assert got == _py_scc(E)
 
 
-def test_scc_self_loops_and_round_cap(spark):
+def test_scc_self_loops_and_round_cap(spark, monkeypatch):
     import pytest
     from cartwright_spark.functions.graph import (
         strongly_connected_components as scc)
@@ -1303,8 +1318,9 @@ def test_scc_self_loops_and_round_cap(spark):
     assert got == {1: 1, 2: 1}
     chain = spark.createDataFrame([(i, i + 1) for i in range(30)],
                                   "src long, dst long")
+    _force_distributed(monkeypatch)      # the cap bounds the peel's rounds
     with pytest.raises(RuntimeError, match="rounds"):
-        scc(chain, max_rounds=3, driver_threshold=0)
+        scc(chain, max_rounds=3)
 
 
 # ------------------------------------------------- harmonic centrality
@@ -1334,21 +1350,18 @@ def _py_harmonic(E, sources, max_hops=12):
     return {v: (c, h) for v, (c, h) in out.items()}
 
 
-def test_harmonic_centrality_brute_force(spark):
+def test_harmonic_centrality_brute_force(spark, leg):
     from cartwright_spark.functions.graph import harmonic_centrality
     E = sorted({((i * 7 + 3) % 25, (i * 11 + 5) % 25) for i in range(80)}
                - {(i, i) for i in range(25)})
     df = spark.createDataFrame(E, "src long, dst long")
     want = _py_harmonic(E, [0, 1, 2])
-    for thr in (100_000, 0):     # driver BFS AND frontier path
-        got = {r.id: (r.n_reached, r.h_sum)
-               for r in harmonic_centrality(
-                   df, sources=[0, 1, 2],
-                   driver_threshold=thr).collect()}
-        assert set(got) == set(want), thr
-        for v in want:
-            assert got[v][0] == want[v][0]
-            assert abs(got[v][1] - want[v][1]) < 1e-12
+    got = {r.id: (r.n_reached, r.h_sum)
+           for r in harmonic_centrality(df, sources=[0, 1, 2]).collect()}
+    assert set(got) == set(want)
+    for v in want:
+        assert got[v][0] == want[v][0]
+        assert abs(got[v][1] - want[v][1]) < 1e-12
 
 
 def test_harmonic_centrality_chain_distances(spark):
@@ -1428,11 +1441,12 @@ def test_assortativity_star_is_degenerate(spark):
 
 # ------------------------------------------------ diameter double sweep
 
-def test_diameter_sweep_path_graph_exact(spark):
+def test_diameter_sweep_path_graph_exact(spark, monkeypatch):
     from cartwright_spark.functions.graph import diameter_double_sweep
     E = [(i, i + 1) for i in range(10)]
     df = spark.createDataFrame(E, "src long, dst long")
-    r = diameter_double_sweep(df, start=4, driver_threshold=0).collect()[0]
+    _force_distributed(monkeypatch)      # the other sweep tests: driver leg
+    r = diameter_double_sweep(df, start=4).collect()[0]
     # from 4 the far end is 10 (d=6, ties broken toward min id — 10
     # beats nothing; 0 is at d=4); sweep from 10 spans the whole path
     assert r.start_ecc == 6 and r.far_id == 10
@@ -1498,28 +1512,58 @@ def test_tfidf_validation_and_min_len(spark):
         tfidf_top_terms(docs, topk=0)
 
 
-def test_lpa_driver_and_distributed_paths_identical(spark):
-    from cartwright_spark.functions.graph import label_propagation
-    c1 = [(a, b) for a in range(5) for b in range(5) if a < b]
-    c2 = [(a + 20, b + 20) for a, b in c1]
-    edges = spark.createDataFrame(c1 + c2 + [(4, 20), (3, 21)],
-                                  ["src", "dst"])
-    fast = sorted(map(tuple,
-                      label_propagation(edges, iters=4).collect()))
-    dist = sorted(map(tuple,
-                      label_propagation(edges, iters=4,
-                                        driver_threshold=0).collect()))
-    assert fast == dist and len(fast) == 10
-
-
-def test_cc_driver_and_distributed_paths_identical(spark):
+def test_cc_driver_and_distributed_paths_identical(spark, monkeypatch):
     from cartwright_spark.functions.graph import connected_components
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (11, 12), (12, 10), (20, 21)],
         ["src", "dst"])
     fast = sorted(map(tuple, connected_components(edges).collect()))
-    dist = sorted(map(tuple, connected_components(
-        edges, driver_threshold=0).collect()))
+    _force_distributed(monkeypatch)
+    dist = sorted(map(tuple, connected_components(edges).collect()))
     assert fast == dist
     assert dict(fast) == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10,
                           20: 20, 21: 20}
+
+
+# ------------------------------- guarded graph operators: edge-case inputs
+
+# directed: a 3-cycle with a tail (1->2->3->1, 3->4) plus a lone edge
+_CYCLE_TAIL = [(1, 2), (2, 3), (3, 1), (3, 4), (10, 11)]
+
+
+@pytest.mark.parametrize("call, on_graph, on_empty, schema", [
+    (lambda e: graph.connected_components(e),
+     [(1, 1), (2, 1), (3, 1), (4, 1), (10, 10), (11, 10)], [],
+     "struct<id:int,component:int>"),
+    (lambda e: graph.strongly_connected_components(e),
+     [(1, 1), (2, 1), (3, 1), (4, 4), (10, 10), (11, 11)], [],
+     "struct<id:int,scc_id:int>"),
+    (lambda e: graph.harmonic_centrality(e, sources=[1]),
+     [(2, 1, 1.0), (3, 1, 0.5), (4, 1, 1 / 3)], [],
+     "struct<id:bigint,n_reached:bigint,h_sum:double>"),
+    (lambda e: graph.diameter_double_sweep(e, start=1),
+     [(1, 2, 4, 2, 4)], [(1, 0, 1, 0, 1)],
+     "struct<start_id:bigint,start_ecc:int,far_id:bigint,diameter_lb:int,"
+     "n_reached:bigint>"),
+], ids=["cc", "scc", "harmonic", "diameter"])
+@pytest.mark.parametrize("edges", ["int32", "empty"])
+def test_guarded_graph_ops_int32_and_empty(spark, leg, call, on_graph,
+                                           on_empty, schema, edges):
+    """Both legs give the same rows and the same schema on int32 ids and
+    on an empty edge list; node ids keep the input's int type."""
+    rows = _CYCLE_TAIL if edges == "int32" else []
+    out = call(spark.createDataFrame(rows, "src int, dst int"))
+    want = on_graph if edges == "int32" else on_empty
+    assert sorted(map(tuple, out.collect())) == want
+    assert out.schema.simpleString() == schema
+
+
+@pytest.mark.parametrize("call, schema", [
+    (graph.grid_bfs_hops, "struct<cell_id:bigint,hops:bigint>"),
+    (graph.cost_distance, "struct<cell_id:bigint,cost:bigint>"),
+], ids=["grid_bfs_hops", "cost_distance"])
+def test_guarded_grid_ops_without_seeds(spark, leg, call, schema):
+    """No seed cell: both legs return no rows, with the same schema."""
+    out = call(_grid_pts(spark, [(10, 4, False), (10, 5, False)]))
+    assert out.collect() == []
+    assert out.schema.simpleString() == schema
